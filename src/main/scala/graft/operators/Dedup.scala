@@ -248,13 +248,12 @@ object Dedup {
     *
     * Min-label propagation: each round joins the (id, label) frontier with
     * the symmetrized edge list and takes the per-node minimum — only
-    * id-sized pairs ever shuffle; the edge list persists across rounds
-    * (re-derivation would re-execute the candidate pipeline per round);
-    * each round's labels are checkpointed so one job runs per round.
-    * Convergence is detected STRUCTURALLY — an existence probe for any id
-    * whose label changed this round (an equi-join of consecutive label
-    * frontiers, short-circuited by `isEmpty`'s limit-1). Works for any id
-    * type, unlike a numeric-sum potential, which silently declares
+    * id-sized pairs ever shuffle; the edge list is checkpointed once
+    * (re-derivation would re-execute the candidate pipeline per round)
+    * and each round's labels are checkpointed, both through [[Iterate]].
+    * Convergence is detected STRUCTURALLY — a count of the ids whose label
+    * changed this round, compared by equality of consecutive labels. Works
+    * for any id type, unlike a numeric-sum potential, which silently declares
     * convergence after one round for non-numeric ids (cast -> NULL) or on
     * decimal overflow. Each round also pointer-jumps (every node adopts
     * its label's label — path halving), so rounds are O(log diameter)
@@ -266,18 +265,15 @@ object Dedup {
     * @return ("id", "cluster") for every id present in `pairs` */
   def dupClusters(pairs: DataFrame, idA: String = "id_a",
                   idB: String = "id_b", maxIter: Int = 50): DataFrame = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Iterate.checkpoint(
+      pairs.select(col(idA).as("src"), col(idB).as("dst"))
+        .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+        .distinct(), lit(true)).frame
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
-      .localCheckpoint(eager = true)
     val clusterType = labels.schema("cluster").dataType
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val msgs = edges.join(labels, edges("src") === labels("id"))
+    Iterate.loop("dupClusters", maxIter) { it =>
+      val msgs = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("cluster"))
       // carry each id's PREVIOUS label through the min-aggregation (the
       // labels side contributes exactly one row per id and every msg dst
@@ -303,33 +299,13 @@ object Dedup {
           base.unionByName(
             jump.withColumn("__old", lit(null).cast(clusterType)))
         }
-      // convergence rides the checkpoint action itself (`observe` collects
-      // the changed-row count during the SAME job — guide §1.4/§2.4: the
-      // former filter+isEmpty probe was one extra job per round, ~10% of
-      // the loop's wall time on latency-bound tiny graphs)
-      val obs = org.apache.spark.sql.Observation()
-      val next = withJump
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"),
-          min(col("__old")).as("__old"))
-        .observe(obs, sum(when(col("cluster") === col("__old"), 0L)
-          .otherwise(1L)).as("__changed"))
-        .localCheckpoint(eager = true)
-      // the metric is delivered asynchronously on the listener bus —
-      // usually within a few ms of the checkpoint action, but a busy bus
-      // can lag unboundedly, so poll briefly and fall back to the (cheap)
-      // structural probe rather than stalling the round
-      val fut = obs.future
-      val deadline = System.nanoTime() + 100L * 1000 * 1000
-      while (!fut.isCompleted && System.nanoTime() < deadline) Thread.sleep(2)
-      converged = fut.value.flatMap(_.toOption) match {
-        case Some(r) => r.isNullAt(0) || r.getLong(0) == 0L
-        case None => next.filter(col("cluster") =!= col("__old")).isEmpty
-      }
-      labels = next.drop("__old")
-      it += 1
+      val changed = Iterate.checkpoint(
+        withJump.groupBy(col("id")).agg(min(col("cluster")).as("cluster"),
+          min(col("__old")).as("__old")),
+        col("cluster") =!= col("__old"))
+      labels = changed.frame.drop("__old")
+      changed.nonEmpty
     }
-    edges.unpersist(blocking = false)
-    require(converged, s"dupClusters did not converge within $maxIter rounds")
     labels
   }
 

@@ -101,10 +101,11 @@ object Graph {
     * Iterative peeling over the undirected simple graph (loops dropped,
     * both orientations deduped): each round removes every node whose
     * CURRENT degree is < k, until no node drops. Rounds = peel depth;
-    * each round is one partial-aggregated degree count, a bounded
-    * existence probe, and two anti-joins — no driver-side data, O(1)
-    * lineage via persist/unpersist. A hub's degree only shrinks as its
-    * neighbors peel, so work decreases monotonically.
+    * the edge list is checkpointed once, then each round checkpoints the
+    * dropped nodes (one partial-aggregated degree count; their number is
+    * the stop test) and the edges left after two anti-joins, all through
+    * [[Iterate]] — no driver-side data. A hub's degree only shrinks as
+    * its neighbors peel, so work decreases monotonically.
     *
     * Returns ("node") — the k-core members. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
@@ -116,36 +117,21 @@ object Graph {
       .where(s.isNotNull && d.isNotNull && s =!= d)
       .select(least(s, d).as("a"), greatest(s, d).as("b"))
       .distinct()
-    var e = und.select(col("a"), col("b"))
-      .union(und.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val deg = e.groupBy("a").agg(count(lit(1)).as("__d"))
-      val drop = deg.filter(col("__d") < k).select(col("a").as("__gone"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      done = drop.isEmpty
-      if (!done) {
-        val next = e
+    var e = Iterate.checkpoint(und.select(col("a"), col("b"))
+      .union(und.select(col("b").as("a"), col("a").as("b"))), lit(true)).frame
+    Iterate.loop("k-core peeling", maxIter) { _ =>
+      val gone = Iterate.checkpoint(e.groupBy("a")
+        .agg(count(lit(1)).as("__d")).filter(col("__d") < k)
+        .select(col("a").as("__gone")), lit(true))
+      val drop = gone.frame
+      val more = gone.nonEmpty
+      if (more)
+        e = Iterate.checkpoint(e
           .join(drop, e("a") === drop("__gone"), "left_anti")
-          .join(drop, e("b") === drop("__gone"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        e.unpersist()
-        e = next
-      }
-      drop.unpersist()
-      it += 1
+          .join(drop, e("b") === drop("__gone"), "left_anti"), lit(true)).frame
+      more
     }
-    require(done, s"k-core peeling did not converge within $maxIter rounds")
-    // checkpoint before unpersisting: the core must not re-derive the
-    // whole anti-join chain once the cache is gone
-    val core = e.select(col("a").as("node")).distinct()
-      .localCheckpoint(eager = true)
-    e.unpersist()
-    core
+    e.select(col("a").as("node")).distinct()
   }
 
   /** @param edges  link table; one row per (src, dst) pair (dupes dropped)

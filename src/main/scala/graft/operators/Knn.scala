@@ -16,9 +16,10 @@ import graft.sql.Geo
   * done when its k-th best distance is <= ((r-1)*res)^2, because every point
   * within that distance lies inside Chebyshev ring r of the query cell.
   * Rounds are O(log) in the distance to the k-th neighbor. No driver-side
-  * data loops — the only per-round driver actions are an `isEmpty` gate on
-  * the shrinking query set and cache bookkeeping. Results are exact and
-  * deterministic (ties broken by the caller's tie columns).
+  * data loops — the rounds run through [[Iterate]], which checkpoints each
+  * round's top-k and open query set and counts them in the same action.
+  * Results are exact and deterministic (ties broken by the caller's tie
+  * columns).
   */
 object Knn {
 
@@ -76,10 +77,7 @@ object Knn {
         col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
       .withColumn("__lvl", lit(startLevel))
-      .localCheckpoint(eager = true)
-    val out = metersLoop(pts, leveled, k, Seq(startLevel), tieCols, onRound)
-    if (persistPoints) pts.unpersist(blocking = false)
-    out
+    metersLoop(pts, leveled, k, Seq(startLevel), tieCols, onRound)
   }
 
   /** Adaptive-start spherical kNN: per-query starting level chosen from a
@@ -162,21 +160,22 @@ object Knn {
       .localCheckpoint(eager = true)
     val levels = leveled.select(col("__lvl")).distinct()
       .collect().map(_.getInt(0)).sorted // bounded: ≤ maxStartLevel/2+1
-    val out = metersLoop(pts, leveled, k, levels.toSeq, tieCols, onRound)
-    if (persistPoints) pts.unpersist(blocking = false)
-    out
+    // an empty query set enters nothing at the finest level and ends there
+    metersLoop(pts, leveled, k,
+      if (levels.isEmpty) Seq(maxStartLevel) else levels.toSeq, tieCols, onRound)
   }
 
   /** The shared spherical-expansion loop with staged query activation:
     * `pts` must carry `__pcell` at a level ≥ every entry in `levels`;
-    * `leveled` must be checkpointed and carry (qid, qlon, qlat, __lvl)
-    * with `__lvl` drawn from `levels`. The loop starts at the FINEST
+    * `leveled` carries (qid, qlon, qlat, __lvl) with `__lvl` drawn from
+    * the non-empty `levels`. The loop starts at the FINEST
     * entry level and coarsens by 2 per round (radius ×4 in lockstep, so
     * radius = 2·minWidth(level) at every round); queries activate when
     * the loop reaches their `__lvl` — from that round on their (level,
     * radius) schedule is identical to a dedicated loop started there, so
     * the output is exactly the per-group result while every round's
-    * candidate join is shared. See [[knnMetersJoin]] for the algorithm. */
+    * candidate join is shared. See [[knnMetersJoin]] for the algorithm.
+    * `pts` is unpersisted when the loop ends. */
   private def metersLoop(pts: DataFrame, leveled: DataFrame, k: Int,
                          levels: Seq[Int], tieCols: Seq[String],
                          onRound: (Int, Int, Long) => Unit): DataFrame = {
@@ -235,9 +234,6 @@ object Knn {
         .withColumnRenamed("__dist", "dist_m")
         .drop("__cell", "__ccell", "__pcell", "qlon", "qlat", "__done")
 
-    val bare = leveled.drop("__lvl")
-    if (levels.isEmpty) // empty query set: typed empty result, no rounds
-      return finished(roundTopk(bare, 0, 1.0, finalRound = false)).limit(0)
     // the loop visits levels.max, max-2, ..., then clamps at 0 — an entry
     // level off that lattice would never activate (silent query loss)
     require(levels.forall(l => l == 0 || (levels.max - l) % 2 == 0),
@@ -247,8 +243,6 @@ object Knn {
     // subsequent round — each entry level must activate exactly once
     val pending = scala.collection.mutable.Set(levels: _*)
     var level = levels.max
-    var round = 0
-    var nActive = 0L
     // round-0 cap: a few cells at the finest entry level; radius then
     // quadruples in lockstep with the level coarsening by 2, so cover
     // size stays flat and radius = 2·minWidth(level) at EVERY round —
@@ -256,76 +250,57 @@ object Knn {
     // chosen level sees the same (level, radius) schedule a dedicated
     // loop started there would run
     var radius = 2.0 * minWidthMeters(level)
-    var remaining: DataFrame = null
+    // radius quadruples every round, so the full-sphere round ends the
+    // loop within this bound
+    val maxRounds =
+      2 + math.ceil(math.log(halfSphere / radius) / math.log(4.0)).toInt
+    var open: Iterate.Round = null // the active, unretired queries
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var done = false
-    // open-query bookkeeping by COUNT over checkpointed frames (see
-    // knnJoin): the retire decision is one tiny aggregation over the
-    // checkpointed top-k; the query-set anti-join + checkpoint is skipped
-    // on rounds that retire nothing and after the final round.
-    while (!done) {
+    Iterate.loop("spherical kNN", maxRounds, pts) { round =>
       // activate the queries whose start level the loop just reached
       if (pending.remove(level)) {
         val entering = leveled.filter($"__lvl" === level).drop("__lvl")
-        remaining = (if (remaining == null) entering
-          else remaining.unionByName(entering)).localCheckpoint(eager = true)
-        nActive = remaining.count()
+        open = Iterate.checkpoint(
+          if (open == null) entering else open.frame.unionByName(entering),
+          lit(true))
       }
       val finalRound = radius >= halfSphere
-      if (nActive > 0) {
+      val active = open != null && open.nonEmpty
+      if (active) {
         val r = if (finalRound) halfSphere + 1.0 else radius // full sphere
-        // the retired-query count rides the checkpoint action itself
-        // (`observe` sums the rank-1 rows flagged __done during the same
-        // job — the former per-round groupBy+count was one extra
-        // scheduled job; see Dedup.dupClusters for the same idiom)
-        val obs = org.apache.spark.sql.Observation()
-        val topk = roundTopk(remaining, level, r, finalRound)
-          .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
-            .otherwise(0L)).as("__ndone"))
-          .localCheckpoint(eager = true)
-        val nDone = observedLong(obs,
-          topk.filter($"__done" && $"rank" === 1).count())
+        val topk = Iterate.checkpoint(
+          roundTopk(open.frame, level, r, finalRound), retired)
+        val nDone = topk.observed
+        // prune on EVERY retiring round, also when it retires all active
+        // queries while entry levels are still pending: a retired qid
+        // left in the open set would be re-activated and emitted twice
         if (nDone > 0) {
-          parts += finished(topk)
-          nActive -= nDone
-          if (nActive > 0)
-            remaining = remaining.join(
-              broadcast(topk.filter($"__done" && $"rank" === 1)
-                .select($"qid")),
-              Seq("qid"), "left_anti")
-              .localCheckpoint(eager = true)
+          parts += finished(topk.frame)
+          open = unretired(open, topk)
         }
         if (onRound != null) onRound(round, level, nDone)
-        if (finalRound) done = true
-      } else if (finalRound || pending.isEmpty) {
-        // nothing active and nothing still to enter below: finished
-        // (queries unretired after the full-sphere round matched ZERO
-        // points — empty dataset — and their correct output is no rows)
-        done = true
       }
       level = math.max(0, level - 2)
       radius *= 4.0
-      round += 1
+      // queries unretired after the full-sphere round matched ZERO points
+      // (empty dataset) and their correct output is no rows
+      !finalRound && (active || pending.nonEmpty)
     }
-    if (parts.isEmpty) // every round skipped (all-empty activation)
-      finished(roundTopk(bare, levels.max, radius,
+    if (parts.isEmpty) // nothing retired: typed empty result
+      finished(roundTopk(leveled.drop("__lvl"), levels.max, radius,
         finalRound = false)).limit(0)
     else parts.reduce(_ unionByName _)
   }
 
-  /** Read an observed long metric, polling briefly (the listener bus can
-    * lag under load) and falling back to the supplied probe — the same
-    * discipline as [[Dedup.dupClusters]]'s convergence metric. */
-  private def observedLong(obs: org.apache.spark.sql.Observation,
-                           fallback: => Long): Long = {
-    val fut = obs.future
-    val deadline = System.nanoTime() + 100L * 1000 * 1000
-    while (!fut.isCompleted && System.nanoTime() < deadline) Thread.sleep(2)
-    fut.value.flatMap(_.toOption) match {
-      case Some(r) => if (r.isNullAt(0)) 0L else r.getLong(0)
-      case None => fallback
-    }
-  }
+  /** A round's top-k row that retires its query (one per retired qid). */
+  private def retired = col("__done") && col("rank") === 1
+
+  /** The open queries minus those the round `topk` retired. */
+  private def unretired(open: Iterate.Round,
+                        topk: Iterate.Round): Iterate.Round =
+    Iterate.checkpoint(open.frame.join(
+      broadcast(topk.frame.filter(retired).select(col("qid"))),
+      Seq("qid"), "left_anti"), lit(true))
 
   /** The distributed kNN join. @param queries df with qid, qlon, qlat.
     *
@@ -382,50 +357,24 @@ object Knn {
         .withColumnRenamed("__dist2", "dist2")
         .drop("__cell", "__ccell", "__qcell", "qlon", "qlat", "__done")
 
-    var remaining = queries.select(col("qid"),
+    var open = Iterate.checkpoint(queries.select(col("qid"),
         col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
       .withColumn("__qcell", call_function("st_gridcell",
-        col("qlon"), col("qlat"), lit(res)))
-      .localCheckpoint(eager = true)
-    // open-query bookkeeping by COUNT over the checkpointed frames: the
-    // loop gate and the "did anything retire" decision cost one tiny
-    // aggregation over the (<= k rows/query) checkpointed top-k, and the
-    // anti-join + checkpoint of the query set is skipped entirely on
-    // rounds that retire nothing and after the final round (r06 — the
-    // former isEmpty-gated shape paid both every round).
-    var nRemaining = remaining.count()
-    var r = 2
+        col("qlon"), col("qlat"), lit(res))), lit(true))
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // ring r = 2, 4, 8, ... up to twice the rings spanning the globe
     val maxR = math.ceil(360.0 / res).toInt + 1
-
-    while (nRemaining > 0 && r <= maxR * 2) {
-      // materialize the (tiny: <= k rows per open query) top-k once —
-      // the finished part, the retired count (observed during the same
-      // job) and the next query set all derive from the checkpointed
-      // result, so the join+window executes exactly once per round and
-      // nothing re-executes when the final union is consumed
-      val obs = org.apache.spark.sql.Observation()
-      val topk = roundTopk(remaining, r)
-        .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
-          .otherwise(0L)).as("__ndone"))
-        .localCheckpoint(eager = true)
-      val nDone = observedLong(obs,
-        topk.filter($"__done" && $"rank" === 1).count())
-      if (nDone > 0) {
-        parts += finished(topk)
-        nRemaining -= nDone
-        if (nRemaining > 0)
-          remaining = remaining.join(
-            broadcast(topk.filter($"__done" && $"rank" === 1).select($"qid")),
-            Seq("qid"), "left_anti")
-            .localCheckpoint(eager = true)
+    val maxRounds = 32 - Integer.numberOfLeadingZeros(maxR)
+    Iterate.loop("kNN join", maxRounds, pts) { i =>
+      val topk = Iterate.checkpoint(roundTopk(open.frame, 2 << i), retired)
+      if (topk.observed > 0) {
+        parts += finished(topk.frame)
+        open = unretired(open, topk)
       }
-      r *= 2
+      open.nonEmpty
     }
-    if (persistPoints) pts.unpersist(blocking = false)
-    require(nRemaining == 0, "kNN join did not converge")
-    if (parts.isEmpty) finished(roundTopk(remaining, 2)).limit(0)
+    if (parts.isEmpty) finished(roundTopk(open.frame, 2)).limit(0)
     else parts.reduce(_ unionByName _)
   }
 }

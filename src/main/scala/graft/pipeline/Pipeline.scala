@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sql.Geo
@@ -15,6 +15,13 @@ import graft.sql.Geo
   * manifested buckets so rerunning after a failure processes only the
   * remainder. The layout mirrors an Iceberg table (data/ + manifests) so a
   * real catalog can slot in via `df.writeTo` when the jar is present.
+  *
+  * Like Iceberg, the table plans from its own metadata: every read of
+  * `data/`, a snapshot subtree, `manifests/` or `deletes/` takes its schema
+  * from a Parquet footer ([[Footers]]) instead of a schema-inference job,
+  * compaction's tombstone probe reads footer statistics, and a resumable
+  * run's committed-row count sums footer row counts. Building a read frame
+  * runs no Spark job.
   */
 object Pipeline {
 
@@ -52,30 +59,22 @@ object Pipeline {
       filesPerBucket: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val data = df.withColumn("snapshot_id", lit(snapshotId))
-    // co-locate each bucket before the dynamic-partition write: without
-    // this every task writes a file per bucket it happens to hold
-    // (tasks x buckets tiny files — a small-file explosion at scale);
-    // with it the file count is bounded by bucket count x filesPerBucket.
-    // filesPerBucket > 1 salts hot buckets across that many writer tasks —
-    // at 100 TB a dense world region lands in one bucket, and a single
-    // writer task for it would be the straggler.
-    val parted =
-      if (filesPerBucket > 1)
-        data.repartition(col("bucket"),
-          pmod(hash(data.columns.map(col): _*), lit(filesPerBucket)))
-      else data.repartition(col("bucket"))
     // snapshot_id leads the partition spec so each snapshot owns its own
     // directory subtree: the manifest read-back below and `readSnapshot`
     // prune at the directory level (PartitionFilters) instead of opening
     // every file in table history — manifesting snapshot N must stay O(N's
     // output), not O(table history).
-    parted
+    coLocated(data, filesPerBucket)
       .write.mode(SaveMode.Append).partitionBy("snapshot_id", "bucket")
       .parquet(s"$tableDir/data")
     // read the just-written snapshot's own subtree, not the table root: a
     // root read lists EVERY snapshot's partition directories before the
-    // filter prunes — O(table history) per commit on a long-lived table
-    val written = spark.read.parquet(s"$tableDir/data/snapshot_id=$snapshotId")
+    // filter prunes — O(table history) per commit on a long-lived table.
+    // An empty write creates no subtree at all (a resumed run with nothing
+    // left to do): its read-back is an empty frame of the written columns.
+    val written = Footers.read(spark, snapshotDir(tableDir, snapshotId))
+      .getOrElse(spark.createDataFrame(
+        java.util.List.of[Row](), data.drop("snapshot_id").schema))
       // partition-column types are inferred from directory names (int vs
       // long depends on the values present) — pin them so manifests from
       // different snapshots always share one schema
@@ -87,6 +86,38 @@ object Pipeline {
       s"""{"snapshot_id":$snapshotId,"ts":${System.currentTimeMillis()}}""")
     (manifest, written)
   }
+
+  /** Co-locate each bucket before a dynamic-partition write (the snapshot
+    * write and the compaction rewrite): without this every task writes a
+    * file per bucket it happens to hold (tasks x buckets tiny files — a
+    * small-file explosion at scale); with it the file count is bounded by
+    * bucket count x filesPerBucket. filesPerBucket > 1 salts hot buckets
+    * across that many writer tasks — at 100 TB a dense world region lands
+    * in one bucket, and a single writer task for it would be the straggler.
+    *
+    * The exchange gets the explicit width `defaultParallelism`: AQE never
+    * coalesces a user-specified partition count, while it squeezes an
+    * unsized one down to its 64 MB advisory target — one task writing every
+    * bucket file in turn on a small snapshot. Each bucket (or bucket x salt)
+    * still hashes to exactly one partition, so the file count is unchanged
+    * and the writers run as wide as the cluster. */
+  private def coLocated(data: DataFrame, filesPerBucket: Int): DataFrame = {
+    val width = data.sparkSession.sparkContext.defaultParallelism
+    if (filesPerBucket > 1)
+      data.repartition(width, col("bucket"),
+        pmod(hash(data.columns.map(col): _*), lit(filesPerBucket)))
+    else data.repartition(width, col("bucket"))
+  }
+
+  private def snapshotDir(tableDir: String, snapshotId: Long): String =
+    s"$tableDir/data/snapshot_id=$snapshotId"
+
+  /** A table directory that must already hold a committed file (`data/`
+    * and `manifests/` after the first commit, `deletes/` once the
+    * tombstone probe found one); reading it earlier is an error. */
+  private def committed(spark: SparkSession, dir: String): DataFrame =
+    Footers.read(spark, dir).getOrElse(throw new IllegalArgumentException(
+      s"$dir holds no data file: nothing is committed there yet"))
 
   /** Per-bucket lineage row (rows, bytes, key range) over already-written
     * snapshot data — shared by `writeSnapshot` and the compaction rebuild. */
@@ -127,13 +158,13 @@ object Pipeline {
     }
 
   /** Buckets already committed across all snapshots of the table. */
-  def processedBuckets(spark: SparkSession, tableDir: String): DataFrame = {
-    val path = s"$tableDir/manifests"
-    if (!Files.exists(Paths.get(path.replace("file:", "")))) {
-      import spark.implicits._
-      Seq.empty[Long].toDF("bucket")
-    } else spark.read.parquet(path).select("bucket").distinct()
-  }
+  def processedBuckets(spark: SparkSession, tableDir: String): DataFrame =
+    Footers.read(spark, s"$tableDir/manifests") match {
+      case Some(m) => m.select("bucket").distinct()
+      case None =>
+        import spark.implicits._
+        Seq.empty[Long].toDF("bucket")
+    }
 
   /** Resume: drop the input rows whose bucket is already manifested. The
     * anti-join is broadcast (bucket list is small) so the big input is
@@ -147,7 +178,7 @@ object Pipeline {
     * to and including `snapshotId`. */
   def readSnapshot(spark: SparkSession, tableDir: String,
                    snapshotId: Long): DataFrame =
-    spark.read.parquet(s"$tableDir/data")
+    committed(spark, s"$tableDir/data")
       .filter(col("snapshot_id") <= snapshotId)
 
   /** Incremental read (Iceberg's `incremental-from-snapshot` / CDC append
@@ -159,7 +190,7 @@ object Pipeline {
     * O(new data), never O(table), no matter how much history accumulates. */
   def readIncremental(spark: SparkSession, tableDir: String,
                       fromExclusive: Long, toInclusive: Long): DataFrame =
-    spark.read.parquet(s"$tableDir/data")
+    committed(spark, s"$tableDir/data")
       .filter(col("snapshot_id") > fromExclusive &&
         col("snapshot_id") <= toInclusive)
 
@@ -239,17 +270,16 @@ object Pipeline {
   def readCurrent(spark: SparkSession, tableDir: String,
                   asOf: Long = Long.MaxValue,
                   keyCol: String = "image_id"): DataFrame = {
-    val data = spark.read.parquet(s"$tableDir/data")
+    val data = committed(spark, s"$tableDir/data")
       .filter(col("snapshot_id") <= asOf)
-    val delPath = Paths.get(tableDir, "deletes")
-    if (!Files.exists(delPath)) data
-    else {
-      val dels = spark.read.parquet(delPath.toString)
-        .filter(col("delete_snapshot") <= asOf)
-      data.join(dels,
-        data(keyCol).cast("string") === dels("del_key") &&
-          dels("delete_snapshot") > data("snapshot_id"),
-        "left_anti")
+    Footers.read(spark, s"$tableDir/deletes") match {
+      case None => data
+      case Some(all) =>
+        val dels = all.filter(col("delete_snapshot") <= asOf)
+        data.join(dels,
+          data(keyCol).cast("string") === dels("del_key") &&
+            dels("delete_snapshot") > data("snapshot_id"),
+          "left_anti")
     }
   }
 
@@ -276,7 +306,7 @@ object Pipeline {
       .otherwise(env.getField("ymax"))
     val ymin = when(call_function("st_tiley", b).cast("long") === n - 1, lit(-90.0))
       .otherwise(env.getField("ymin"))
-    spark.read.parquet(s"$tableDir/data")
+    committed(spark, s"$tableDir/data")
       .filter(env.getField("xmin") <= maxLon && env.getField("xmax") >= minLon &&
         ymin <= maxLat && ymax >= minLat)
       .filter(col("lon") >= minLon && col("lon") <= maxLon &&
@@ -314,17 +344,18 @@ object Pipeline {
     // (their masked rows simply don't travel into the base snapshot) and
     // retired in step 4 — this is the copy-on-write leg of the v2
     // contract, and what keeps the live delete set bounded.
-    val raw = spark.read.parquet(dataDir.toString)
+    val raw = committed(spark, dataDir.toString)
       .filter(col("snapshot_id") <= upToSnapshotId)
       .withColumn("bucket", col("bucket").cast("long"))
-    val tombstonesApplied = F.exists(delDir) &&
-      spark.read.parquet(delDir.toString)
-        .filter(col("delete_snapshot") <= upToSnapshotId)
-        .limit(1).count() > 0
+    // footer statistics answer "is any tombstone at or below the squash
+    // point?" without a job; a row group without statistics answers yes,
+    // which takes the exact (rebuild) path below
+    val tombstonesApplied = Footers.mayHoldAtMost(delDir.toString,
+      "delete_snapshot", upToSnapshotId)
     val applied =
       if (!tombstonesApplied) raw
       else {
-        val dels = spark.read.parquet(delDir.toString)
+        val dels = committed(spark, delDir.toString)
           .filter(col("delete_snapshot") <= upToSnapshotId)
         raw.join(dels,
           raw(keyCol).cast("string") === dels("del_key") &&
@@ -333,12 +364,8 @@ object Pipeline {
       }
     val base = applied.drop("snapshot_id")
     val tmp = Paths.get(tableDir, s"compact_tmp_$upToSnapshotId")
-    val parted =
-      if (filesPerBucket > 1)
-        base.repartition(col("bucket"),
-          pmod(hash(base.columns.map(col): _*), lit(filesPerBucket)))
-      else base.repartition(col("bucket"))
-    parted.write.mode(SaveMode.Overwrite).partitionBy("bucket")
+    coLocated(base, filesPerBucket)
+      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(tmp.toString)
     // 2. swap, delete-last: rename the expired snapshot directories ASIDE
     // (into a staging dir outside the scan root), move the compacted
@@ -377,7 +404,7 @@ object Pipeline {
     fencedRewrite(manifestsDir, mTmp, aside.resolve("manifests_old"),
       "manifests", onFirstAttempt = beforeManifestSwap,
       afterFenceSeam = afterFence) { () =>
-      val m = spark.read.parquet(manifestsDir.toString)
+      val m = committed(spark, manifestsDir.toString)
       // Summing the old manifest rows is exact only when every squashed row
       // survived the rewrite; once tombstones dropped rows, rebuild the base
       // manifest from the compacted files themselves (pure IO over the
@@ -389,16 +416,10 @@ object Pipeline {
             .agg(sum("rows").as("rows"), sum("bytes").as("bytes"),
               min("min_key").as("min_key"), max("max_key").as("max_key"))
             .withColumn("snapshot_id", lit(upToSnapshotId))
-        else {
-          val hasFiles = {
-            val s = F.walk(target)
-            try s.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-            finally s.close()
-          }
-          if (!hasFiles) m.filter(lit(false)) // every row tombstoned
-          else manifestOf(
-            spark.read.parquet(target.toString)
-              .withColumn("bucket", col("bucket").cast("long")),
+        else Footers.read(spark, target.toString) match {
+          case None => m.filter(lit(false)) // every row tombstoned
+          case Some(t) => manifestOf(
+            t.withColumn("bucket", col("bucket").cast("long")),
             upToSnapshotId, keyCol, bytesCol)
         }
       val squashed = squashed0.select(m.columns.map(col): _*)
@@ -416,7 +437,7 @@ object Pipeline {
       val dTmp = Paths.get(tableDir, s"deletes_tmp_$upToSnapshotId")
       fencedRewrite(delDir, dTmp, aside.resolve("deletes_old"),
         "deletes") { () =>
-        spark.read.parquet(delDir.toString)
+        committed(spark, delDir.toString)
           .filter(col("delete_snapshot") > upToSnapshotId)
           .repartition(1) // one part even when empty — dir stays readable
           .write.mode(SaveMode.Overwrite).parquet(dTmp.toString)
@@ -426,7 +447,7 @@ object Pipeline {
     deleteRecursively(aside)
     appendLogLine(tableDir,
       s"""{"compacted_to":$upToSnapshotId,"ts":${System.currentTimeMillis()}}""")
-    spark.read.parquet(manifestsDir.toString)
+    committed(spark, manifestsDir.toString)
       .filter(col("snapshot_id") === upToSnapshotId)
   }
 
@@ -503,7 +524,9 @@ object Pipeline {
   }
 
   /** Full checkpointed run: bucket the input, skip processed buckets,
-    * apply `transform`, write a new snapshot. Returns (manifest, #rows). */
+    * apply `transform`, write a new snapshot. Returns (manifest, #rows):
+    * #rows is the footer row count of the snapshot's committed subtree (no
+    * job), so a re-run with nothing left returns (empty manifest, 0). */
   def runResumable(input: DataFrame, lonCol: String, latCol: String,
                    tableDir: String, snapshotId: Long, zoom: Int = 3,
                    keyCol: String = "image_id", bytesCol: String = "bytes")(
@@ -512,6 +535,6 @@ object Pipeline {
     val todo = remainingInput(bucketed, tableDir)
     val out = transform(todo)
     val manifest = writeSnapshot(out, tableDir, snapshotId, keyCol, bytesCol)
-    (manifest, manifest.agg(coalesce(sum("rows"), lit(0L))).collect()(0).getLong(0))
+    (manifest, Footers.rowCount(snapshotDir(tableDir, snapshotId)))
   }
 }

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +15,47 @@ class PipelineSpec extends AnyFunSuite {
   private def freshDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag").toFile
     d.delete(); d.getAbsolutePath
+  }
+
+  /** Spark jobs started by `body`: a listener counts job starts tagged with
+    * a job group set around `body`, and a marker job in a second group
+    * closes the window — events reach a listener in order, so once the
+    * marker's start arrives every job `body` started has been counted. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"pipeline-spec-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-end" => closed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      assert(closed.await(15, TimeUnit.SECONDS), "marker job start not delivered")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Parquet files under `d/data`, counted per bucket directory. */
+  private def filesPerBucket(d: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get(d, "data")
+    val out = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".parquet")) {
+        val bucket = p.getParent.getFileName.toString
+        out(bucket) = out.getOrElse(bucket, 0) + 1
+      }
+    }
+    out.toMap
   }
 
   test("snapshot write + resume + time travel") {
@@ -117,29 +162,12 @@ class PipelineSpec extends AnyFunSuite {
     val images = Pipeline.withBucket(
       ImagesTable.generate(spark, 2000L), "lon", "lat", zoom = 1)
     Pipeline.writeSnapshot(images, dir, 1L)
-    def parquetFiles(d: String): Map[String, Int] = {
-      val root = java.nio.file.Paths.get(d, "data")
-      val out = scala.collection.mutable.Map.empty[String, Int]
-      java.nio.file.Files.walk(root).forEach { p =>
-        if (p.toString.endsWith(".parquet")) {
-          val bucket = p.getParent.getFileName.toString
-          out(bucket) = out.getOrElse(bucket, 0) + 1
-        }
-      }
-      out.toMap
-    }
     // co-located write: exactly one file per bucket per snapshot
-    assert(parquetFiles(dir).values.forall(_ == 1), parquetFiles(dir))
+    assert(filesPerBucket(dir).values.forall(_ == 1), filesPerBucket(dir))
 
     val dir2 = freshDir("files2")
-    // AQE's partition coalescing re-merges the salted groups at toy data
-    // sizes (they are far below the 64MB advisory target); at real scale a
-    // hot bucket's salt groups exceed the target and stay split. Disable
-    // coalescing here to observe the salting mechanism itself.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try Pipeline.writeSnapshot(images, dir2, 1L, filesPerBucket = 4)
-    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    val counts = parquetFiles(dir2)
+    Pipeline.writeSnapshot(images, dir2, 1L, filesPerBucket = 4)
+    val counts = filesPerBucket(dir2)
     assert(counts.values.forall(_ <= 4), counts)
     assert(counts.values.exists(_ > 1), s"hot buckets should split: $counts")
     // same rows either way
@@ -339,5 +367,103 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$dir/metrics.jsonl"))
     assert(lines.size() == nStages)
     assert(lines.get(0).contains("\"tasks\":"))
+  }
+
+  test("re-running a finished resumable run commits nothing and returns (empty manifest, 0)") {
+    val dir = freshDir("rerun")
+    val input = ImagesTable.generate(spark, 2000L)
+    val (_, first) = Pipeline.runResumable(input, "lon", "lat", dir, 1L)(df => df)
+    assert(first == 2000L)
+    // every bucket is manifested: the re-run (a crash after the last
+    // commit) writes an empty frame, which creates no snapshot subtree
+    val (manifest, again) = Pipeline.runResumable(input, "lon", "lat", dir, 2L)(df => df)
+    assert(again == 0L)
+    assert(manifest.count() == 0L)
+    assert(manifest.columns.toSet ==
+      Set("bucket", "rows", "bytes", "min_key", "max_key", "snapshot_id"))
+    // the same for direct writes and merges of an empty frame
+    val empty = Pipeline.withBucket(input, "lon", "lat", zoom = 3).limit(0)
+    assert(Pipeline.writeSnapshot(empty, dir, 3L).count() == 0L)
+    assert(Pipeline.mergeSnapshot(empty, dir, 4L, mergeKeyCol = "image_id").count() == 0L)
+    assert(Pipeline.readCurrent(spark, dir).count() == 2000L)
+    assert(Pipeline.remainingInput(
+      Pipeline.withBucket(input, "lon", "lat", zoom = 3), dir).count() == 0L)
+  }
+
+  test("building read frames runs no Spark job; footer reads keep the inferred schema") {
+    val dir = freshDir("nojobs")
+    // zoom 2: at most 16 bucket directories per snapshot, below Spark's
+    // parallel-listing threshold, so file listing stays on the driver too
+    val images = Pipeline.withBucket(
+      ImagesTable.generate(spark, 1000L), "lon", "lat", zoom = 2)
+    Pipeline.writeSnapshot(images, dir, 1L)
+    Pipeline.mergeSnapshot(images.filter(col("image_id") < "img000000100")
+      .withColumn("caption", lit("v2")), dir, 2L, mergeKeyCol = "image_id")
+    Pipeline.deleteWhere(spark, dir, col("image_id") >= "img000000900", 3L)
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsIn {
+      frames = Seq(
+        Pipeline.readCurrent(spark, dir),
+        Pipeline.readBox(spark, dir, -180.0, -90.0, 180.0, 90.0),
+        Pipeline.readSnapshot(spark, dir, 2L))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs before any action")
+    assert(frames.map(_.count()) == Seq(900L, 1100L, 1100L))
+    val inferred = spark.read.parquet(s"$dir/data")
+    assert(Pipeline.readSnapshot(spark, dir, 2L).schema == inferred.schema)
+    assert(Pipeline.readSnapshot(spark, dir, 2L).schema.map(_.name) ==
+      images.columns.filter(_ != "bucket").toSeq ++ Seq("snapshot_id", "bucket"))
+  }
+
+  test("writeSnapshot writes its bucket files from several tasks, one file per bucket") {
+    val dir = freshDir("wide")
+    val images = Pipeline.withBucket(
+      ImagesTable.generate(spark, 2000L), "lon", "lat", zoom = 2)
+    Pipeline.writeSnapshot(images, dir, 1L)
+    val counts = filesPerBucket(dir)
+    assert(counts.size > 1 && counts.values.forall(_ == 1), counts)
+    // part-NNNNN is the writing task's partition id
+    val tasks = scala.collection.mutable.Set.empty[String]
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "data")).forEach { p =>
+      val n = p.getFileName.toString
+      if (n.endsWith(".parquet")) tasks += n.take("part-00000".length)
+    }
+    assert(tasks.size > 1, s"one writer task wrote every bucket: $tasks")
+  }
+
+  test("compaction below every tombstone keeps them: reads and manifest totals unchanged") {
+    val dir = freshDir("keepdel")
+    val images = Pipeline.withBucket(
+      ImagesTable.generate(spark, 1500L), "lon", "lat", zoom = 3)
+    Pipeline.writeSnapshot(images.filter(col("image_id") < "img000000800"), dir, 1L)
+    Pipeline.writeSnapshot(images.filter(col("image_id") >= "img000000800"), dir, 2L)
+    Pipeline.mergeSnapshot(images.filter(col("image_id") < "img000000200")
+      .withColumn("caption", lit("v2")), dir, 3L, mergeKeyCol = "image_id")
+    def current = Pipeline.readCurrent(spark, dir)
+      .select("image_id", "caption").collect().map(_.toString).sorted.toSeq
+    val before = current
+    val tombstones = spark.read.parquet(s"$dir/deletes").count()
+    val manifestRows = spark.read.parquet(s"$dir/manifests")
+      .agg(sum("rows")).collect()(0).getLong(0)
+    assert(before.size == 1500 && tombstones == 200L)
+
+    // every tombstone (delete_snapshot 3) is newer than the squash point
+    Pipeline.compactSnapshots(spark, dir, 2L)
+    assert(spark.read.parquet(s"$dir/deletes").count() == tombstones)
+    assert(current == before)
+    assert(spark.read.parquet(s"$dir/manifests")
+      .agg(sum("rows")).collect()(0).getLong(0) == manifestRows)
+  }
+
+  test("runResumable's row count is the committed snapshot's, for a cut run and its resume") {
+    val dir = freshDir("rescount")
+    val input = ImagesTable.generate(spark, 2000L)
+    val (_, cut) = Pipeline.runResumable(
+      input.filter(col("lon") < 0.0), "lon", "lat", dir, 1L)(df => df)
+    assert(cut > 0L && cut == Pipeline.readSnapshot(spark, dir, 1L).count())
+    val (_, resumed) = Pipeline.runResumable(input, "lon", "lat", dir, 2L)(df => df)
+    assert(resumed > 0L &&
+      resumed == Pipeline.readIncremental(spark, dir, 1L, 2L).count())
+    assert(cut + resumed == 2000L)
   }
 }
